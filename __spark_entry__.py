@@ -518,8 +518,17 @@ def q_dedup_cluster_sizes(spark, sf_dir):
         from collections import Counter
 
         hist = Counter(stats["label_sizes"].values())
-        n_singletons = d.count() - sum(stats["label_sizes"].values())
-        if n_singletons > 0:
+        # singletons = ids outside the pair graph; counting them as
+        # rows - labeled is exact only for unique doc_id (a repeated id
+        # is one graph node but several rows), so check that contract
+        n_docs, n_ids = d.agg(F.count("*"), F.count_distinct("doc_id")).first()
+        n_singletons = n_ids - sum(stats["label_sizes"].values())
+        if n_docs != n_ids or n_singletons < 0:
+            raise ValueError(
+                f"dedup_cluster_sizes needs unique doc_id: {n_docs} rows, "
+                f"{n_ids} distinct ids, {n_singletons} singletons"
+            )
+        if n_singletons:
             hist[1] += n_singletons
         return local_frame(
             spark,
@@ -2506,6 +2515,9 @@ EXPORT_SCHEMAS: dict[str, str] = {
     _LAYER_HITS_EXPORT: "layer VARCHAR, hits INTEGER",
     _REPAIR_ACTIONS_EXPORT: "action VARCHAR",
     _BPE_MERGES_EXPORT: "rank BIGINT, a VARCHAR, b VARCHAR",
+    _BYTE_BPE_MERGES_EXPORT: "rank BIGINT, a VARCHAR, b VARCHAR",
+    _IVF_PQ_EXPORT: "q_id BIGINT, vec_id BIGINT",
+    os.path.join(_IVF_PQ_INDEX, "codebooks"): "sub INTEGER, code INTEGER, pos INTEGER, val BIGINT",
     _PIPE_FUNNEL_EXPORT: "doc_id BIGINT, ok BOOLEAN, nonempty BOOLEAN",
     _REPAIR_DEBUG_EXPORT: "layer VARCHAR, status VARCHAR, repairs BIGINT",
 }

@@ -471,7 +471,7 @@ def incremental_near_dup_components(
         sh = shingles(new.unionByName(old_matched)).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-    verified = jaccard_verify_candidates(sh, cand, threshold=threshold, handles=handles)
+    verified = jaccard_verify_candidates(sh, cand, threshold=threshold)
     prior = seen_components.select("doc_id", "rep_id")
     prior_edges = prior.where(F.col("doc_id") != F.col("rep_id")).select(
         F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
@@ -535,12 +535,26 @@ def jaccard_pairs(
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_common"))
     )
+    stats = inter.join(
+        sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a"
+    ).join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+    return _jaccard_scored(stats, "doc_a", "doc_b", threshold)
+
+
+def _jaccard_scored(stats: DataFrame, a: str, b: str, threshold: float) -> DataFrame:
+    """THE Jaccard score of every verifier, driver or distributed:
+    ``round(n_common / (n_a + n_b - n_common), 6) >= threshold`` over
+    a (a, b, n_common, n_a, n_b) table.  Only exact integer counts
+    differ between routes; the float division and rounding stay this
+    one Spark expression, so every route is bit-identical by
+    construction."""
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn("jaccard", F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
+        stats.withColumn(
+            "jaccard",
+            F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6),
+        )
         .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        .select(a, b, "jaccard")
     )
 
 
@@ -700,7 +714,6 @@ def components_from_pairs(
     max_iters: int = 20,
     algorithm: str = "min_label",
     stats_out: dict | None = None,
-    collect_max_pairs: int = SMALL_GRAPH_COLLECT_PAIRS,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph: every doc gets
     ``rep_id`` = the smallest doc_id reachable through pairs (its
@@ -727,7 +740,12 @@ def components_from_pairs(
     ``all_ids``: one column ``doc_id``; ``pairs``: ``doc_a``/``doc_b``.
     Returns (doc_id, rep_id, is_canonical).  ``stats_out`` (optional
     dict) receives {"rounds": N} — the round-complexity evidence hook
-    for the adversarial-graph drills."""
+    for the adversarial-graph drills.
+
+    Graphs of at most ``SMALL_GRAPH_COLLECT_PAIRS`` pairs (read at call
+    time; a negative cap forces the loop) label through one driver
+    union-find instead, and ``stats_out`` then also receives
+    ``driver_union_find`` and ``label_sizes``."""
     if algorithm not in ("min_label", "star"):
         raise ValueError(f"unknown components algorithm: {algorithm!r}")
     # materialize the pair list ONCE before mirroring: the union's two
@@ -744,9 +762,9 @@ def components_from_pairs(
     # at 250 pairs a 64-partition loop spends ~1.5 s/round scheduling
     # empty tasks; at 10^9 pairs this grows back to a real fan-out
     n_pairs = p.count()
-    if algorithm == "min_label" and n_pairs <= collect_max_pairs:
+    if algorithm == "min_label" and n_pairs <= SMALL_GRAPH_COLLECT_PAIRS:
         sizes: dict = {}
-        labels = _driver_union_find(p, n_pairs, sizes_out=sizes)
+        labels = _driver_union_find(p, sizes_out=sizes)
         if stats_out is not None:
             stats_out["rounds"] = 0
             stats_out["driver_union_find"] = True
@@ -816,9 +834,7 @@ def components_from_pairs(
     raise ValueError(f"components_from_pairs did not converge in {max_iters} rounds")
 
 
-def _driver_union_find(
-    p: DataFrame, n_pairs: int, sizes_out: dict | None = None
-) -> DataFrame:
+def _driver_union_find(p: DataFrame, sizes_out: dict | None = None) -> DataFrame:
     """Connected components of a SMALL pair graph (columns u, v;
     caller-bounded row count) as one driver-side union-find over the
     Arrow-collected edge list.  Union-by-min with path compression, so
@@ -1043,7 +1059,7 @@ def soft_dedup_weights(
     )
     if "label_sizes" in stats:
         # the driver union-find already knows every component's size
-        # (bounded by the pair graph, <= 2 * collect_max_pairs rows):
+        # (bounded by the pair graph, <= 2 * SMALL_GRAPH_COLLECT_PAIRS rows):
         # broadcast the local size table instead of the corpus-wide
         # groupBy + join-back — same integers, two exchanges fewer,
         # and no shuffle keyed on a skewable rep_id at all (r07)
@@ -1123,7 +1139,7 @@ def lsh_verified_pairs(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     if handles is not None:
         handles.extend([sh_all, cand])
-    return jaccard_verify_candidates(sh_all, cand, threshold, handles=handles)
+    return jaccard_verify_candidates(sh_all, cand, threshold)
 
 
 def fuzzy_decontaminate(
@@ -1136,7 +1152,6 @@ def fuzzy_decontaminate(
     eval_text_col: str = "text",
     broadcast_eval: bool = True,
     handles: list | None = None,
-    collect_max_pairs: int | None = None,
 ) -> DataFrame:
     """FUZZY benchmark decontamination — the GPT-3 / Pile move: drop
     training docs that NEAR-duplicate an eval document, not only docs
@@ -1154,7 +1169,14 @@ def fuzzy_decontaminate(
     join, the ``lsh_verified_pairs`` pattern), corpus docs never
     self-join, and the verify joins are semi-join-pruned to candidate
     docs — candidate volume is bounded by bucket collisions against
-    the eval set, not by corpus size."""
+    the eval set, not by corpus size.
+
+    Small candidate sets verify on the driver through
+    ``_driver_pair_stats`` (its bipartite form: the corpus side and
+    the eval side collect separately), under the same caps, input
+    contract and score expression as ``jaccard_verify_candidates``:
+    doc ids unique on each side (the driver route's Python sets match
+    the joins' row counts only then)."""
     from pyspark import StorageLevel
 
     corp_sh = shingles(docs, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1178,112 +1200,102 @@ def fuzzy_decontaminate(
     )
     if handles is not None:
         handles.append(cand)
-    # small candidate sets route to the same driver fast path as
-    # jaccard_verify_candidates (bounded Arrow collects, Python set
-    # intersections on exact integers, the SAME Spark round/division
-    # expression over a LocalTableScan — bit-identical); the
-    # distributed bipartite joins below are the >cap path
-    cap = SMALL_VERIFY_COLLECT_PAIRS if collect_max_pairs is None else collect_max_pairs
-    n_cand = cand.count()
-    if n_cand <= cap:
-        from json_remedy_spark.localdf import local_frame
-
-        spark = docs.sparkSession
-        pairs_pdf = cand.select("doc_id", "eval_id").toPandas()
-        c_ids = sorted(set(pairs_pdf["doc_id"].tolist()))
-        e_ids = sorted(set(pairs_pdf["eval_id"].tolist()))
-        lim = SMALL_VERIFY_COLLECT_SHINGLE_ROWS
-        c_pdf = (
-            corp_sh.join(
-                F.broadcast(local_frame(spark, [(int(i),) for i in c_ids], "doc_id long")),
-                "doc_id",
-                "left_semi",
-            )
-            .select("doc_id", "shingle")
-            .limit(lim + 1)
-            .toPandas()
+    stats = _driver_pair_stats(cand, "doc_id", "eval_id", corp_sh, eval_sh)
+    if stats is None:
+        sh = corp_sh.join(cand.select("doc_id").distinct(), "doc_id", "left_semi")
+        sizes_c = sh.groupBy("doc_id").agg(F.count("*").alias("n_a"))
+        sizes_e = eval_sh.groupBy("doc_id").agg(F.count("*").alias("n_b")).select(
+            F.col("doc_id").alias("eval_id"), "n_b"
         )
-        e_pdf = (
-            eval_sh.join(
-                F.broadcast(local_frame(spark, [(int(i),) for i in e_ids], "doc_id long")),
-                "doc_id",
-                "left_semi",
-            )
-            .select("doc_id", "shingle")
-            .limit(lim + 1)
-            .toPandas()
+        ev_sh = eval_sh.select(F.col("doc_id").alias("eval_id"), "shingle")
+        if broadcast_eval:
+            ev_sh, sizes_e = F.broadcast(ev_sh), F.broadcast(sizes_e)
+        inter = (
+            cand.join(sh, "doc_id")
+            .join(ev_sh, ["eval_id", "shingle"])
+            .groupBy("doc_id", "eval_id")
+            .agg(F.count("*").alias("n_common"))
         )
-        if len(c_pdf) <= lim and len(e_pdf) <= lim:
-            c_sets: dict = {}
-            for did, s in zip(c_pdf["doc_id"].tolist(), c_pdf["shingle"].tolist()):
-                c_sets.setdefault(did, set()).add(s)
-            e_sets: dict = {}
-            for did, s in zip(e_pdf["doc_id"].tolist(), e_pdf["shingle"].tolist()):
-                e_sets.setdefault(did, set()).add(s)
-            rows = []
-            for d, e in zip(pairs_pdf["doc_id"].tolist(), pairs_pdf["eval_id"].tolist()):
-                sd = c_sets.get(d)
-                se = e_sets.get(e)
-                if not sd or not se:
-                    continue  # mirrors the inner sizes joins
-                n_common = len(sd & se)
-                if n_common == 0:
-                    continue  # mirrors the inner intersection join
-                rows.append((int(d), int(e), n_common, len(sd), len(se)))
-            stats = local_frame(
-                spark,
-                rows,
-                "doc_id long, eval_id long, n_common long, n_c long, n_e long",
-            )
-            return (
-                stats.withColumn(
-                    "jaccard",
-                    F.round(
-                        F.col("n_common")
-                        / (F.col("n_c") + F.col("n_e") - F.col("n_common")),
-                        6,
-                    ),
-                )
-                .where(F.col("jaccard") >= threshold)
-                .select("doc_id", "eval_id", "jaccard")
-            )
-        # over the shingle-row bound: fall through to the joins
-
-    sh = corp_sh.join(cand.select("doc_id").distinct(), "doc_id", "left_semi")
-    sizes_c = sh.groupBy("doc_id").agg(F.count("*").alias("n_c"))
-    sizes_e = eval_sh.groupBy("doc_id").agg(F.count("*").alias("n_e")).select(
-        F.col("doc_id").alias("eval_id"), "n_e"
-    )
-    ev_sh = eval_sh.select(F.col("doc_id").alias("eval_id"), "shingle")
-    if broadcast_eval:
-        ev_sh, sizes_e = F.broadcast(ev_sh), F.broadcast(sizes_e)
-    inter = (
-        cand.join(sh, "doc_id")
-        .join(ev_sh, ["eval_id", "shingle"])
-        .groupBy("doc_id", "eval_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        inter.join(sizes_c, "doc_id")
-        .join(sizes_e, "eval_id")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common") / (F.col("n_c") + F.col("n_e") - F.col("n_common")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_id", "eval_id", "jaccard")
-    )
+        stats = inter.join(sizes_c, "doc_id").join(sizes_e, "eval_id")
+    return _jaccard_scored(stats, "doc_id", "eval_id", threshold)
 
 
+# Caps of the Jaccard verifiers' driver route, read at call time (a
+# negative cap is never met and forces the distributed joins): pairs
+# per candidate set, and shingle rows per collected shingle table.
 SMALL_VERIFY_COLLECT_PAIRS = 1 << 16
 SMALL_VERIFY_COLLECT_SHINGLE_ROWS = 1 << 21
 
 
+def _driver_pair_stats(
+    cand: DataFrame, a: str, b: str, a_sh: DataFrame, b_sh: DataFrame | None = None
+) -> DataFrame | None:
+    """The driver route of both Jaccard verifiers: exact integer
+    (a, b, n_common, n_a, n_b) rows for the candidate pairs ``cand``
+    (columns ``a``, ``b``), served as a LocalTableScan — or None when
+    the candidates are over a cap and the caller runs its distributed
+    joins instead.
+
+    ``b_sh=None`` is the self-join case: ``a_sh`` holds both sides'
+    shingles and collects ONCE for the docs of either side.  Otherwise
+    ``a_sh`` (ids in column ``a``) and ``b_sh`` (ids in column ``b``)
+    collect separately — the bipartite corpus/eval case.
+
+    Probe order: ``cand.count()`` (callers persist ``cand``), then one
+    Arrow collect of at most SMALL_VERIFY_COLLECT_PAIRS pairs, then per
+    shingle table a broadcast-semi-pruned (shuffle-free) collect of
+    the candidate docs' rows under
+    ``limit(SMALL_VERIFY_COLLECT_SHINGLE_ROWS + 1)``.  A fall-through
+    therefore reads at most the cap + 1 rows per collect, the same
+    bound the driver route holds when it runs.
+
+    Input contract: distinct (doc_id, shingle) rows and unique doc
+    ids — what ``shingles`` emits.  Python sets equal the joins' row
+    counts only then."""
+    if cand.count() > SMALL_VERIFY_COLLECT_PAIRS:
+        return None
+    from json_remedy_spark.localdf import local_frame
+
+    spark = cand.sparkSession
+    pairs = cand.select(a, b).toPandas()
+    lim = SMALL_VERIFY_COLLECT_SHINGLE_ROWS
+
+    def shingle_sets(sh: DataFrame, ids: set) -> dict | None:
+        ids_f = local_frame(spark, [(int(i),) for i in sorted(ids)], "doc_id long")
+        pdf = (
+            sh.join(F.broadcast(ids_f), "doc_id", "left_semi")
+            .select("doc_id", "shingle")
+            .limit(lim + 1)
+            .toPandas()
+        )
+        if len(pdf) > lim:
+            return None
+        sets: dict = {}
+        for did, s in zip(pdf["doc_id"].tolist(), pdf["shingle"].tolist()):
+            sets.setdefault(did, set()).add(s)
+        return sets
+
+    a_ids, b_ids = set(pairs[a].tolist()), set(pairs[b].tolist())
+    if b_sh is None:
+        a_sets = b_sets = shingle_sets(a_sh, a_ids | b_ids)
+    else:
+        a_sets = shingle_sets(a_sh, a_ids)
+        b_sets = None if a_sets is None else shingle_sets(b_sh, b_ids)
+    if a_sets is None or b_sets is None:
+        return None
+    empty = frozenset()
+    rows = []
+    for x, y in zip(pairs[a].tolist(), pairs[b].tolist()):
+        n_common = len(a_sets.get(x, empty) & b_sets.get(y, empty))
+        if n_common:  # the intersection join drops pairs sharing nothing
+            rows.append((int(x), int(y), n_common, len(a_sets[x]), len(b_sets[y])))
+    return local_frame(
+        spark, rows, f"{a} long, {b} long, n_common long, n_a long, n_b long"
+    )
+
+
 def jaccard_verify_candidates(
-    sh_all: DataFrame, cand: DataFrame, threshold: float = 0.8,
-    handles: list | None = None,  # accepted for API symmetry; the semi
-    # output is localCheckpointed (not persisted), so nothing to hand out
-    collect_max_pairs: int = SMALL_VERIFY_COLLECT_PAIRS,
+    sh_all: DataFrame, cand: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
     """Exact n-gram Jaccard over SUPPLIED candidate pairs from a
     SUPPLIED exploded (doc_id, shingle) table — the verify stage of the
@@ -1291,106 +1303,62 @@ def jaccard_verify_candidates(
     AT-REST signature table (``lsh_candidate_pairs_from_table``).
     Callers should persist both inputs; each feeds two joins.
 
-    Small candidate sets (<= ``collect_max_pairs`` pairs AND <= 2^21
-    candidate-doc shingle rows — both Arrow-collect-bounded, the
+    Input contract: ``sh_all`` holds distinct (doc_id, shingle) rows
+    and one document per doc_id, as ``shingles`` emits them.  The
+    driver route's Python sets equal the distributed row counts only
+    for such input.
+
+    Small candidate sets (<= SMALL_VERIFY_COLLECT_PAIRS pairs AND <=
+    SMALL_VERIFY_COLLECT_SHINGLE_ROWS candidate-doc shingle rows, the
     ``components_from_pairs`` SMALL_GRAPH_COLLECT_PAIRS precedent)
-    route to a DRIVER fast path: the bounded pair list and the
-    candidate docs' shingle rows (broadcast-semi-pruned, NO shuffle)
-    collect once, set intersections run in Python on exact integers,
-    and the jaccard itself is computed by the SAME Spark
-    ``round(n_common / (n_a + n_b - n_common), 6)`` expression over a
-    LocalTableScan of those integers — bit-identical to the join
-    form (integer counts are association-free; the division/rounding
-    expression is literally the same).  This replaces the verify
+    verify on the driver through ``_driver_pair_stats``: the pair list
+    and the candidate docs' shingle rows collect once, and set
+    intersections give exact integer counts.  This replaces the verify
     DAG's ~10 exchange-bounded stages (semi + sizes agg + two
     intersection joins + two size joins) with two shuffle-free jobs —
     per-stage fixed cost dominates these stages at bounded candidate
     volume.  Hub-capped production graphs (candidates ~256 per doc)
     exceed the cap at corpus scale and keep the distributed path
-    below, which is unchanged."""
-    n_cand = cand.count()
-    if n_cand <= collect_max_pairs:
-        from json_remedy_spark.localdf import local_frame
-
-        spark = sh_all.sparkSession
-        pairs_pdf = cand.select("doc_a", "doc_b").toPandas()
-        ids = sorted({*pairs_pdf["doc_a"].tolist(), *pairs_pdf["doc_b"].tolist()})
-        ids_f = local_frame(spark, [(int(i),) for i in ids], "doc_id long")
-        sh_pdf = (
-            sh_all.join(F.broadcast(ids_f), "doc_id", "left_semi")
-            .select("doc_id", "shingle")
-            .limit(SMALL_VERIFY_COLLECT_SHINGLE_ROWS + 1)
-            .toPandas()
+    below.  Both routes score through ``_jaccard_scored``, so they are
+    bit-identical: integer counts are association-free and the
+    division/rounding expression is literally the same."""
+    stats = _driver_pair_stats(cand, "doc_a", "doc_b", sh_all)
+    if stats is None:
+        # shrink the shingle table to docs that appear in ANY candidate
+        # pair before the two intersection joins — at 10^12 docs the
+        # candidate set is a tiny fraction of the corpus and this
+        # semi-join is what keeps the verify stage from shuffling the
+        # full shingle table twice.  No distinct on the key union: a
+        # left-semi join needs no unique build keys, and the distinct
+        # was a full extra exchange.  The semi output is materialized
+        # ONCE (eager localCheckpoint) because THREE consumers read it
+        # (sizes, the a-side and the b-side of the intersection join)
+        # and Catalyst does not dedupe common subtrees — unmaterialized,
+        # the semi-join and its candidate-id scan re-ran per consumer
+        # (measured 3x the stage cost at r07).  localCheckpoint, NOT
+        # persist: the truncation is ALSO what keeps downstream plan
+        # strings bounded — a lazy persist re-embeds the whole upstream
+        # tree under each of the three consumers, and in the composed
+        # corpus job that plan-string blowup OOMed the 4g driver at
+        # generateTreeString (observed r07; the CLAUDE.md iterative-loop
+        # gotcha, same mechanism).
+        cand_docs = cand.select(F.col("doc_a").alias("doc_id")).union(
+            cand.select(F.col("doc_b").alias("doc_id"))
         )
-        if len(sh_pdf) <= SMALL_VERIFY_COLLECT_SHINGLE_ROWS:
-            sets: dict = {}
-            for did, s in zip(sh_pdf["doc_id"].tolist(), sh_pdf["shingle"].tolist()):
-                sets.setdefault(did, set()).add(s)
-            rows = []
-            for a, b in zip(pairs_pdf["doc_a"].tolist(), pairs_pdf["doc_b"].tolist()):
-                sa = sets.get(a)
-                sb = sets.get(b)
-                if not sa or not sb:
-                    continue  # mirrors the inner sizes join
-                n_common = len(sa & sb)
-                if n_common == 0:
-                    continue  # mirrors the inner intersection join
-                rows.append((int(a), int(b), n_common, len(sa), len(sb)))
-            stats = local_frame(
-                spark, rows, "doc_a long, doc_b long, n_common long, n_a long, n_b long"
-            )
-            return (
-                stats.withColumn(
-                    "jaccard",
-                    F.round(
-                        F.col("n_common")
-                        / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                        6,
-                    ),
-                )
-                .where(F.col("jaccard") >= threshold)
-                .select("doc_a", "doc_b", "jaccard")
-            )
-        # over the shingle-row bound: fall through to the distributed
-        # path (the aborted probe read at most the bound + 1 rows)
-    # shrink the shingle table to docs that appear in ANY candidate
-    # pair before the two intersection joins — at 10^12 docs the
-    # candidate set is a tiny fraction of the corpus and this semi-join
-    # is what keeps the verify stage from shuffling the full shingle
-    # table twice.  No distinct on the key union: a left-semi join
-    # needs no unique build keys, and the distinct was a full extra
-    # exchange.  The semi output is materialized ONCE (eager
-    # localCheckpoint) because THREE consumers read it (sizes, the
-    # a-side and the b-side of the intersection join) and Catalyst
-    # does not dedupe common subtrees — unmaterialized, the semi-join
-    # and its candidate-id scan re-ran per consumer (measured 3x the
-    # stage cost at r07).  localCheckpoint, NOT persist: the
-    # truncation is ALSO what keeps downstream plan strings bounded —
-    # a lazy persist re-embeds the whole upstream tree under each of
-    # the three consumers, and in the composed corpus job that
-    # plan-string blowup OOMed the 4g driver at generateTreeString
-    # (observed r07; the CLAUDE.md iterative-loop gotcha, same
-    # mechanism).
-    cand_docs = cand.select(F.col("doc_a").alias("doc_id")).union(
-        cand.select(F.col("doc_b").alias("doc_id"))
-    )
-    sh = sh_all.join(cand_docs, "doc_id", "left_semi").localCheckpoint()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b_sh = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(a_sh, "doc_a")
-        .join(b_sh, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn("jaccard", F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+        sh = sh_all.join(cand_docs, "doc_id", "left_semi").localCheckpoint()
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+        a_sh = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+        b_sh = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+        inter = (
+            cand.join(a_sh, "doc_a")
+            .join(b_sh, ["doc_b", "shingle"])
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count("*").alias("n_common"))
+        )
+        stats = inter.join(
+            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a"
+        ).join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+    return _jaccard_scored(stats, "doc_a", "doc_b", threshold)
 
 
 # ---- bloom-prefiltered incremental dedup ----------------------------------

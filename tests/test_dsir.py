@@ -127,8 +127,8 @@ def test_fuzzy_decontaminate_finds_near_dup_of_eval(spark):
     assert len(p2) == 1 and p2[0]["jaccard"] == 1.0
 
 
-def test_fuzzy_decontaminate_eval_side_broadcasts(spark):
-    from json_remedy_spark.functions.dedup import fuzzy_decontaminate
+def test_fuzzy_decontaminate_eval_side_broadcasts(spark, monkeypatch):
+    from json_remedy_spark.functions import dedup
 
     corpus = spark.createDataFrame(
         [(i, f"some words number {i} in a row repeated {i} again") for i in range(20)],
@@ -136,17 +136,17 @@ def test_fuzzy_decontaminate_eval_side_broadcasts(spark):
     )
     ev = spark.createDataFrame([(0, "some words number 0")], "doc_id long, text string")
     handles = []
-    # scale path (forced past the r07 driver fast path): the eval side
-    # must broadcast into the bipartite joins
-    pairs = fuzzy_decontaminate(
-        corpus, ev, threshold=0.0, handles=handles, collect_max_pairs=0
-    )
+    # scale path (forced past the driver route): the eval side must
+    # broadcast into the bipartite joins
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "SMALL_VERIFY_COLLECT_PAIRS", -1)
+        pairs = dedup.fuzzy_decontaminate(corpus, ev, threshold=0.0, handles=handles)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     # bounded-candidate default routes driver-side: a LocalTableScan,
     # no join in the result plan (r07)
     handles2 = []
-    fast = fuzzy_decontaminate(corpus, ev, threshold=0.0, handles=handles2)
+    fast = dedup.fuzzy_decontaminate(corpus, ev, threshold=0.0, handles=handles2)
     fast_plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in fast_plan, fast_plan
     for h in handles + handles2:

@@ -1104,38 +1104,87 @@ def test_dedup_job_stored_path_matches_in_memory(spark, tmp_path):
     assert stored == mem and any(not c for _, _, c in stored)  # some dups exist
 
 
-def test_jaccard_verify_driver_fast_path_parity(spark):
-    """r07: the small-candidate-set driver fast path (bounded Arrow
-    collect + Python set intersections + the SAME Spark round/division
-    expression over a LocalTableScan) must be row- and value-identical
-    to the distributed join form, including schema, the
-    no-common-shingle drop, and the threshold filter."""
-    from json_remedy_spark.functions.dedup import (
-        banded_signatures,
-        candidate_pairs_from_banded,
-        jaccard_verify_candidates,
-        minhash_from_shingles,
-        shingles,
-    )
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_jaccard_verify_driver_fast_path_parity(spark, monkeypatch):
+    """The verifier's driver route (bounded Arrow collects + Python set
+    intersections + the SAME Spark round/division expression over a
+    LocalTableScan) must be row- and value-identical to the
+    distributed join form, including schema, the no-common-shingle
+    drop, and the threshold filter — on both sides of the pair cap
+    and of the shingle-row cap."""
+    from json_remedy_spark.functions import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
-    sh = shingles(docs).persist()
-    cand = candidate_pairs_from_banded(
-        banded_signatures(minhash_from_shingles(sh))
+    sh = dedup.shingles(docs).persist()
+    # the driver route's input contract: distinct (doc_id, shingle) rows
+    assert sh.count() == sh.distinct().count() > 0
+    cand = dedup.candidate_pairs_from_banded(
+        dedup.banded_signatures(dedup.minhash_from_shingles(sh))
     ).persist()
-    fast_df = jaccard_verify_candidates(sh, cand, threshold=0.5)
-    slow_df = jaccard_verify_candidates(sh, cand, threshold=0.5, collect_max_pairs=0)
-    assert [f.name for f in fast_df.schema.fields] == [
-        f.name for f in slow_df.schema.fields
-    ]
-    assert [f.dataType for f in fast_df.schema.fields] == [
-        f.dataType for f in slow_df.schema.fields
-    ]
+    n_cand = cand.count()
+    cand_ids = cand.select(F.col("doc_a").alias("doc_id")).union(
+        cand.select(F.col("doc_b").alias("doc_id"))
+    )
+    n_rows = sh.join(cand_ids, "doc_id", "left_semi").count()
+
+    def verify(**caps):
+        with monkeypatch.context() as m:
+            for name, cap in caps.items():
+                m.setattr(dedup, name, cap)
+            return dedup.jaccard_verify_candidates(sh, cand, threshold=0.5)
+
+    fast_df = verify(
+        SMALL_VERIFY_COLLECT_PAIRS=n_cand, SMALL_VERIFY_COLLECT_SHINGLE_ROWS=n_rows
+    )
+    assert "LocalTableScan" in _plan(fast_df)
     fast = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in fast_df.collect()}
-    slow = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in slow_df.collect()}
-    assert fast == slow and fast  # exact values incl. rounding, non-empty
+    assert fast  # non-empty
+    for slow_df in (
+        verify(SMALL_VERIFY_COLLECT_PAIRS=n_cand - 1),
+        verify(SMALL_VERIFY_COLLECT_SHINGLE_ROWS=n_rows - 1),
+    ):
+        assert "LocalTableScan" not in _plan(slow_df)
+        assert [(f.name, f.dataType) for f in fast_df.schema.fields] == [
+            (f.name, f.dataType) for f in slow_df.schema.fields
+        ]
+        slow = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in slow_df.collect()}
+        assert fast == slow  # exact values incl. rounding
+    sh.unpersist()
+    cand.unpersist()
+
+
+def test_jaccard_verify_empty_candidates_forced_distributed(spark, monkeypatch):
+    """A negative pair cap is never met: even an EMPTY candidate set
+    takes the distributed joins (no LocalTableScan in the plan), while
+    the default serves it driver-side with no join; both routes agree
+    on the empty result."""
+    from json_remedy_spark.functions import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        "doc_id", "text"
+    )
+    sh = dedup.shingles(docs).persist()
+    # doc_a < doc_b always holds for band candidates: empty, but not
+    # provably so to the optimizer
+    cand = (
+        dedup.candidate_pairs_from_banded(
+            dedup.banded_signatures(dedup.minhash_from_shingles(sh))
+        )
+        .where(F.col("doc_a") > F.col("doc_b"))
+        .persist()
+    )
+    fast_df = dedup.jaccard_verify_candidates(sh, cand, threshold=0.5)
+    assert "Join" not in _plan(fast_df)  # an empty driver-local frame
+    monkeypatch.setattr(dedup, "SMALL_VERIFY_COLLECT_PAIRS", -1)
+    slow_df = dedup.jaccard_verify_candidates(sh, cand, threshold=0.5)
+    slow_plan = _plan(slow_df)
+    assert "Join" in slow_plan and "LocalTableScan" not in slow_plan
+    assert fast_df.collect() == slow_df.collect() == []
     sh.unpersist()
     cand.unpersist()
 
@@ -1164,25 +1213,86 @@ def test_soft_dedup_sizes_from_driver_labels_parity(spark):
     assert any(sz == 1 for _, _, sz, _ in fast)  # singletons present
 
 
-def test_fuzzy_decontaminate_driver_fast_path_parity(spark):
-    """r07: fuzzy_decontaminate's bounded-candidate driver fast path
-    must equal the distributed bipartite join form exactly (schema,
-    values, rounding)."""
-    from json_remedy_spark.functions.dedup import fuzzy_decontaminate
+def test_dedup_cluster_sizes_rejects_duplicate_doc_ids(spark, tmp_path):
+    """The driver-labels histogram counts singletons as rows minus
+    labeled ids, exact only for unique doc_id: a repeated id must fail
+    loud, not skew the size-1 bucket."""
+    import __spark_entry__ as entry
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs.unionByName(docs.limit(1)).write.parquet(str(tmp_path / "documents.parquet"))
+    with pytest.raises(ValueError, match="unique doc_id"):
+        entry.q_dedup_cluster_sizes(spark, str(tmp_path))
+
+
+def test_fuzzy_decontaminate_driver_fast_path_parity(spark, monkeypatch):
+    """fuzzy_decontaminate's driver route must equal the distributed
+    bipartite join form exactly (schema, values, rounding) on both
+    sides of the pair cap and of the shingle-row cap."""
+    from json_remedy_spark.functions import dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
     corp = docs.where("doc_id % 20 <> 0")
     ev = docs.where("doc_id % 20 = 0")
-    fast_df = fuzzy_decontaminate(corp, ev, threshold=0.5)
-    slow_df = fuzzy_decontaminate(corp, ev, threshold=0.5, collect_max_pairs=0)
-    assert [(f.name, f.dataType) for f in fast_df.schema.fields] == [
-        (f.name, f.dataType) for f in slow_df.schema.fields
-    ]
+    # sizes of the default run's candidate set and its larger shingle side
+    handles = []
+    fast_df = dedup.fuzzy_decontaminate(corp, ev, threshold=0.5, handles=handles)
+    corp_sh, eval_sh, cand = handles
+    n_cand = cand.count()
+    n_rows = max(
+        corp_sh.join(cand.select("doc_id"), "doc_id", "left_semi").count(),
+        eval_sh.join(cand.select(F.col("eval_id").alias("doc_id")), "doc_id", "left_semi").count(),
+    )
+
+    def decon(**caps):
+        with monkeypatch.context() as m:
+            for name, cap in caps.items():
+                m.setattr(dedup, name, cap)
+            return dedup.fuzzy_decontaminate(corp, ev, threshold=0.5)
+
+    at_caps = decon(
+        SMALL_VERIFY_COLLECT_PAIRS=n_cand, SMALL_VERIFY_COLLECT_SHINGLE_ROWS=n_rows
+    )
+    assert "LocalTableScan" in _plan(fast_df) and "LocalTableScan" in _plan(at_caps)
     fast = {(r["doc_id"], r["eval_id"]): r["jaccard"] for r in fast_df.collect()}
-    slow = {(r["doc_id"], r["eval_id"]): r["jaccard"] for r in slow_df.collect()}
-    assert fast == slow and fast  # exact values incl. rounding, non-empty
+    assert fast  # non-empty
+    assert {(r["doc_id"], r["eval_id"]): r["jaccard"] for r in at_caps.collect()} == fast
+    for slow_df in (
+        decon(SMALL_VERIFY_COLLECT_PAIRS=n_cand - 1),
+        decon(SMALL_VERIFY_COLLECT_SHINGLE_ROWS=n_rows - 1),
+    ):
+        assert "LocalTableScan" not in _plan(slow_df)
+        assert [(f.name, f.dataType) for f in fast_df.schema.fields] == [
+            (f.name, f.dataType) for f in slow_df.schema.fields
+        ]
+        slow = {(r["doc_id"], r["eval_id"]): r["jaccard"] for r in slow_df.collect()}
+        assert fast == slow  # exact values incl. rounding
+    for h in handles:
+        h.unpersist()
+
+
+def test_fuzzy_decontaminate_empty_candidates_forced_distributed(spark, monkeypatch):
+    """An eval doc no corpus doc collides with: zero candidates.  The
+    default routes them driver-side (no join); a negative pair cap
+    forces the distributed joins (no LocalTableScan) with the same
+    empty result."""
+    from json_remedy_spark.functions import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        "doc_id", "text"
+    )
+    ev = docs.limit(1).select(
+        "doc_id", F.lit("qzxv wqpl jjyk vvbn mmtr kkdq zzpf").alias("text")
+    )
+    fast_df = dedup.fuzzy_decontaminate(docs, ev, threshold=0.5)
+    assert "Join" not in _plan(fast_df)  # an empty driver-local frame
+    monkeypatch.setattr(dedup, "SMALL_VERIFY_COLLECT_PAIRS", -1)
+    slow_df = dedup.fuzzy_decontaminate(docs, ev, threshold=0.5)
+    slow_plan = _plan(slow_df)
+    assert "Join" in slow_plan and "LocalTableScan" not in slow_plan
+    assert fast_df.collect() == slow_df.collect() == []
 
 
 def test_components_transitive_closure(spark):
@@ -1200,29 +1310,29 @@ def test_components_transitive_closure(spark):
     }
 
 
-def test_components_long_chain_converges(spark):
+def test_components_long_chain_converges(spark, monkeypatch):
     """A 12-node path graph needs ~diameter rounds — must converge, not
-    hit the max_iters guard.  collect_max_pairs=0 forces the
-    DISTRIBUTED loop (the r07 small-graph fast path would otherwise
-    absorb a graph this size)."""
-    from json_remedy_spark.functions.dedup import components_from_pairs
+    hit the max_iters guard.  A negative SMALL_GRAPH_COLLECT_PAIRS
+    forces the DISTRIBUTED loop (the small-graph driver union-find
+    would otherwise absorb a graph this size)."""
+    from json_remedy_spark.functions import dedup
 
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_COLLECT_PAIRS", -1)
     n = 12
     ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"])
-    rows = components_from_pairs(
-        ids, pairs, max_iters=n + 2, collect_max_pairs=0
-    ).collect()
+    rows = dedup.components_from_pairs(ids, pairs, max_iters=n + 2).collect()
     assert all(r["rep_id"] == 0 for r in rows) and len(rows) == n
 
 
-def test_components_driver_fast_path_parity_and_routing(spark):
-    """r07: small pair graphs label via ONE driver union-find; output
-    must equal the distributed min-label loop exactly, the stats hook
-    must say which path ran, and collect_max_pairs must route."""
+def test_components_driver_fast_path_parity_and_routing(spark, monkeypatch):
+    """Small pair graphs label via ONE driver union-find; output must
+    equal the distributed min-label loop exactly, the stats hook must
+    say which path ran, and SMALL_GRAPH_COLLECT_PAIRS must route on
+    both sides of the pair count."""
     import random
 
-    from json_remedy_spark.functions.dedup import components_from_pairs
+    from json_remedy_spark.functions import dedup
 
     rng = random.Random(41)
     n = 40
@@ -1231,17 +1341,15 @@ def test_components_driver_fast_path_parity_and_routing(spark):
     ids = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
 
+    def components(cap, stats):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "SMALL_GRAPH_COLLECT_PAIRS", cap)
+            comp = dedup.components_from_pairs(ids, pairs, stats_out=stats)
+        return sorted(tuple(r) for r in comp.collect())
+
     fast_stats, loop_stats = {}, {}
-    fast = sorted(
-        tuple(r)
-        for r in components_from_pairs(ids, pairs, stats_out=fast_stats).collect()
-    )
-    loop = sorted(
-        tuple(r)
-        for r in components_from_pairs(
-            ids, pairs, stats_out=loop_stats, collect_max_pairs=0
-        ).collect()
-    )
+    fast = components(len(edges), fast_stats)
+    loop = components(len(edges) - 1, loop_stats)
     assert fast == loop
     assert fast_stats.get("driver_union_find") and fast_stats["rounds"] == 0
     assert "driver_union_find" not in loop_stats and loop_stats["rounds"] >= 1
